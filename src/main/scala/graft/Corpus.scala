@@ -105,8 +105,11 @@ final case class Corpus(df: DataFrame, idCol: String, textCol: String) {
     * .DedupIndex]]: keep only the docs that are not a near-duplicate
     * of the indexed corpus (or of a smaller-id doc in this frame).
     * The typical ingest step then upserts the survivors into the
-    * index. Returns the survivor corpus (eagerly materialized — the
-    * admit contract). */
+    * index. The held frame is read ONCE: the gate materializes its
+    * reduced batch on entry, so the lazy chain upstream (curate,
+    * dedupExact, ...) runs once per call, not once per probe scan.
+    * Returns the survivor corpus (eagerly materialized — the admit
+    * contract). */
   def admitAgainst(indexPath: String, threshold: Double = 0.8): Corpus =
     next(graft.operators.DedupIndex.admit(
       df.sparkSession, indexPath, df, idCol, textCol, threshold))
@@ -125,8 +128,9 @@ final case class Corpus(df: DataFrame, idCol: String, textCol: String) {
   /** Semantic ADMISSION against a persisted [[graft.operators
     * .SemanticIndex]] — [[admitAgainst]]'s embedding-space sibling:
     * drop docs within cosine `tau` of an indexed incumbent or a
-    * better-ranked batchmate. Eagerly materialized (the admit
-    * contract); upsert survivors to keep the index fresh. */
+    * better-ranked batchmate. Reads the held frame once and returns
+    * it eagerly materialized (the admit contract); upsert survivors to
+    * keep the index fresh. */
   def admitSemanticAgainst(
       indexPath: String, vecCol: String, tau: Double): Corpus =
     next(graft.operators.SemanticIndex.admit(

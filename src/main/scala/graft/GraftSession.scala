@@ -150,9 +150,9 @@ final case class GraftSession(
     * keep-the-outlier rule) — [[admitDocuments]]'s contract lifted
     * from word shingles to embedding semantics. Requires
     * [[buildSemanticIndex]] first. Probes only; pair survivors with
-    * [[graft.operators.SemanticIndex.upsert]]. EAGERLY MATERIALIZED
-    * like [[admitDocuments]] — free with [[graft.util.Checkpoints
-    * .free]] in long ingest loops. */
+    * [[graft.operators.SemanticIndex.upsert]]. Reads `batch` once and
+    * returns it EAGERLY MATERIALIZED like [[admitDocuments]] — free
+    * with [[graft.util.Checkpoints.free]] in long ingest loops. */
   def admitDocumentsSemantic(batch: DataFrame, tau: Double,
       idCol: String = "id", vecCol: String = "embedding"): DataFrame = {
     val path = semIndexPath.getOrElse(throw new IllegalStateException(
@@ -169,6 +169,9 @@ final case class GraftSession(
     * Probes only; pair the survivors with [[graft.operators.DedupIndex
     * .upsert]] (and [[upsertIndexedKnowledge]]) to admit them.
     *
+    * `batch` is read ONCE: the gate localCheckpoints the reduced batch
+    * on entry and frees it on return, so a lazy upstream (an embedder,
+    * a curation chain) is not re-run by each of the probe's scans.
     * The returned frame is EAGERLY MATERIALIZED (localCheckpoint —
     * the operator convention): in a long-running ingest loop, release
     * its storage blocks with [[graft.util.Checkpoints.free]] once the

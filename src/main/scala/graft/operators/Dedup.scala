@@ -44,7 +44,20 @@ object Dedup {
     * `versionCol` is dropped from the output. */
   def deterministicOnePerKey(df: DataFrame, keyCol: String,
       versionCol: Option[String] = None,
-      tieBreak: Seq[Column] = Nil): DataFrame = {
+      tieBreak: Seq[Column] = Nil): DataFrame =
+    onePerKey(df, keyCol, versionCol, tieBreak, nullKeysKept = false)
+
+  /** [[deterministicOnePerKey]] with every NULL-key row passed through
+    * untouched (no identity to reduce under or to pair with) — the
+    * batch reduction of every admission gate. One scan and one window:
+    * NULL keys share the window's null partition, and the keep
+    * predicate spares all of them. */
+  def onePerKeyNullsKept(df: DataFrame, keyCol: String): DataFrame =
+    onePerKey(df, keyCol, None, Nil, nullKeysKept = true)
+
+  private def onePerKey(df: DataFrame, keyCol: String,
+      versionCol: Option[String], tieBreak: Seq[Column],
+      nullKeysKept: Boolean): DataFrame = {
     versionCol.foreach(vc => require(df.columns.contains(vc),
       s"versionCol $vc not in the frame"))
     val contentTie = xxhash64(to_json(struct(df.columns.map(col): _*))).asc
@@ -55,7 +68,9 @@ object Dedup {
     val order = versionCol.map(vc => col(vc).desc).toSeq ++
       tieBreak :+ contentTie
     val w = Window.partitionBy(col(keyCol)).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    val first = col("__rn") === 1
+    df.withColumn("__rn", row_number().over(w))
+      .filter(if (nullKeysKept) first || col(keyCol).isNull else first)
       .drop("__rn" +: versionCol.toSeq: _*)
   }
 

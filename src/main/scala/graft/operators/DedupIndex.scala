@@ -524,8 +524,14 @@ object DedupIndex {
     * checkpoint is freed (the file's convention — the result must not
     * depend on released blocks).
     *
+    * The batch is READ ONCE: the reduced batch is localCheckpoint'd on
+    * entry ([[graft.util.Checkpoints.withMaterialized]]) and every
+    * scan of the probe and the survivor join reads that checkpoint, so
+    * a lazy upstream (a curation chain, an embedder) runs once per
+    * call, not once per scan.
+    *
     * The batch is reduced to ONE row per id up front
-    * ([[Dedup.deterministicOnePerKey]]): the pairwise candidate rule
+    * ([[Dedup.onePerKeyNullsKept]]): the pairwise candidate rule
     * (strict id_a < id_b) can never pair two rows sharing an id, so
     * same-id duplicates would BOTH pass the gate and then collapse
     * arbitrarily in the follow-up [[upsert]]'s keyed merge. The
@@ -537,13 +543,9 @@ object DedupIndex {
   def admit(
       spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.8,
-      maxBucketPostings: Option[Int] = None): DataFrame = {
-    val batch1 = Dedup.deterministicOnePerKey(
-        batch.filter(col(idCol).isNotNull), idCol)
-      .unionByName(batch.filter(col(idCol).isNull))
-    admitOnePerId(spark, path, batch1, idCol, textCol, threshold,
-      maxBucketPostings)
-  }
+      maxBucketPostings: Option[Int] = None): DataFrame =
+    admitOnePerId(spark, path, Dedup.onePerKeyNullsKept(batch, idCol),
+      idCol, textCol, threshold, maxBucketPostings)
 
   /** [[admit]] minus the up-front one-per-id reduction, for callers
     * that have ALREADY reduced the batch (the streaming path runs
@@ -551,30 +553,32 @@ object DedupIndex {
     * before gating — re-reducing every micro-batch here would add a
     * window shuffle plus a fingerprint scan to the hot ingest path for
     * nothing). The caller's guarantee: at most one row per non-null
-    * id. NULL-id rows pass through as in [[admit]]. */
+    * id. NULL-id rows pass through as in [[admit]]. The batch is
+    * materialized once on entry, as in [[admit]]. */
   private[graft] def admitOnePerId(
-      spark: SparkSession, path: String, batch1: DataFrame,
+      spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      maxBucketPostings: Option[Int]): DataFrame = {
-    val pairs = nearDupsAgainst(spark, path, batch1, idCol, textCol, threshold,
-      maxBucketPostings = maxBucketPostings)
-    try {
-      val batchIds = batch1.select(col(idCol)).distinct()
-      // pairs are normalized id_a < id_b, and corpus incumbents are
-      // never killed: batch id X dies iff it appears as id_b of any
-      // pair (the other side is a corpus doc or a smaller batch id),
-      // or as id_a of a pair whose id_b is a corpus doc (the batch doc
-      // drew the smaller id, but the incumbent still wins).
-      val dead = pairs.select(col("id_b").as("__dead"))
-        .unionByName(
-          pairs.join(batchIds.withColumnRenamed(idCol, "id_a"), Seq("id_a"), "left_semi")
-            .join(batchIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_anti")
-            .select(col("id_a").as("__dead")))
-        .distinct()
-      batch1.join(dead, batch1(idCol) === dead("__dead"), "left_anti")
-        .localCheckpoint(true)
-    } finally Dedup.freeCheckpoint(pairs)
-  }
+      maxBucketPostings: Option[Int]): DataFrame =
+    graft.util.Checkpoints.withMaterialized(batch) { batch1 =>
+      val pairs = nearDupsAgainst(spark, path, batch1, idCol, textCol, threshold,
+        maxBucketPostings = maxBucketPostings)
+      try {
+        val batchIds = batch1.select(col(idCol)).distinct()
+        // pairs are normalized id_a < id_b, and corpus incumbents are
+        // never killed: batch id X dies iff it appears as id_b of any
+        // pair (the other side is a corpus doc or a smaller batch id),
+        // or as id_a of a pair whose id_b is a corpus doc (the batch doc
+        // drew the smaller id, but the incumbent still wins).
+        val dead = pairs.select(col("id_b").as("__dead"))
+          .unionByName(
+            pairs.join(batchIds.withColumnRenamed(idCol, "id_a"), Seq("id_a"), "left_semi")
+              .join(batchIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_anti")
+              .select(col("id_a").as("__dead")))
+          .distinct()
+        batch1.join(dead, batch1(idCol) === dead("__dead"), "left_anti")
+          .localCheckpoint(true)
+      } finally Dedup.freeCheckpoint(pairs)
+    }
 
   /** (id, shingles) checkpointed; NULL-text rows dropped (no content
     * to be a duplicate of) and NULL-id rows dropped (no identity to

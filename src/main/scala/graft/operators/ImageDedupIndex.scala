@@ -325,11 +325,15 @@ object ImageDedupIndex {
         .filter(col("hamming") <= maxHamming)
         .select(least(col("cid"), col("bid")).as("id_a"),
           greatest(col("cid"), col("bid")).as("id_b"), col("hamming"))
-      val all =
-        if (!includeBatchPairs) candCB
-        else candCB.unionByName(Dedup.bandedHammingPairs(fpB, maxHamming))
-      all.dropDuplicates("id_a", "id_b")
+      // the in-batch pair set is its own checkpoint: freed once the
+      // union below has materialized
+      val batchPairs =
+        if (includeBatchPairs) Some(Dedup.bandedHammingPairs(fpB, maxHamming))
+        else None
+      try batchPairs.fold(candCB)(candCB.unionByName(_))
+        .dropDuplicates("id_a", "id_b")
         .localCheckpoint(true) // materialize the (small) pair set
+      finally batchPairs.foreach(Dedup.freeCheckpoint)
     } finally Dedup.freeCheckpoint(bandsB)
   }
 
@@ -337,41 +341,43 @@ object ImageDedupIndex {
     * rule over perceptual pairs: a batch row is dropped when it pairs
     * with any incumbent corpus image, or with any smaller-id batch
     * row (one survivor per dup clique; incumbents always win). The
-    * batch reduces to ONE row per id up front (same-id duplicates must
-    * not both pass). Typical ingest: `admit` → [[upsert]] survivors. */
+    * batch reduces to ONE row per id up front
+    * ([[Dedup.onePerKeyNullsKept]] — same-id duplicates must not both
+    * pass) and is READ ONCE: localCheckpoint'd on entry, every scan of
+    * the probe and the survivor join reads the checkpoint. Typical
+    * ingest: `admit` → [[upsert]] survivors. */
   def admit(
       spark: SparkSession, path: String, batch: DataFrame,
-      idCol: String, fpCol: String, maxHamming: Int = 3): DataFrame = {
-    val batch1 = Dedup.deterministicOnePerKey(
-        batch.filter(col(idCol).isNotNull), idCol)
-      .unionByName(batch.filter(col(idCol).isNull))
-    admitOnePerId(spark, path, batch1, idCol, fpCol, maxHamming)
-  }
+      idCol: String, fpCol: String, maxHamming: Int = 3): DataFrame =
+    admitOnePerId(spark, path, Dedup.onePerKeyNullsKept(batch, idCol),
+      idCol, fpCol, maxHamming)
 
   /** [[admit]] minus the one-per-id reduction, for callers that have
     * already reduced (the streaming path). NULL-id rows pass through
-    * (no identity to pair with). */
+    * (no identity to pair with). The batch is materialized once on
+    * entry, as in [[admit]]. */
   private[graft] def admitOnePerId(
-      spark: SparkSession, path: String, batch1: DataFrame,
-      idCol: String, fpCol: String, maxHamming: Int): DataFrame = {
-    val pairs = nearDupsAgainst(spark, path, batch1, idCol, fpCol, maxHamming)
-    try {
-      val batchIds = batch1.select(col(idCol)).distinct()
-      // pairs are normalized id_a < id_b and incumbents never die:
-      // batch id X dies iff it is id_b of any pair, or id_a of a pair
-      // whose id_b is a corpus id (the incumbent drew the larger id)
-      val dead = pairs.select(col("id_b").as("__dead"))
-        .unionByName(
-          pairs.join(batchIds.withColumnRenamed(idCol, "id_a"),
-              Seq("id_a"), "left_semi")
-            .join(batchIds.withColumnRenamed(idCol, "id_b"),
-              Seq("id_b"), "left_anti")
-            .select(col("id_a").as("__dead")))
-        .distinct()
-      batch1.join(dead, batch1(idCol) === dead("__dead"), "left_anti")
-        .localCheckpoint(true)
-    } finally Dedup.freeCheckpoint(pairs)
-  }
+      spark: SparkSession, path: String, batch: DataFrame,
+      idCol: String, fpCol: String, maxHamming: Int): DataFrame =
+    graft.util.Checkpoints.withMaterialized(batch) { batch1 =>
+      val pairs = nearDupsAgainst(spark, path, batch1, idCol, fpCol, maxHamming)
+      try {
+        val batchIds = batch1.select(col(idCol)).distinct()
+        // pairs are normalized id_a < id_b and incumbents never die:
+        // batch id X dies iff it is id_b of any pair, or id_a of a pair
+        // whose id_b is a corpus id (the incumbent drew the larger id)
+        val dead = pairs.select(col("id_b").as("__dead"))
+          .unionByName(
+            pairs.join(batchIds.withColumnRenamed(idCol, "id_a"),
+                Seq("id_a"), "left_semi")
+              .join(batchIds.withColumnRenamed(idCol, "id_b"),
+                Seq("id_b"), "left_anti")
+              .select(col("id_a").as("__dead")))
+          .distinct()
+        batch1.join(dead, batch1(idCol) === dead("__dead"), "left_anti")
+          .localCheckpoint(true)
+      } finally Dedup.freeCheckpoint(pairs)
+    }
 
   /** [[admit]] from raw decoded images, hashing with the pinned
     * kernel; the fp column is appended as `fpColOut` on the survivors
@@ -388,9 +394,7 @@ object ImageDedupIndex {
     val withFp = batch.withColumn(fpColOut,
       hashBy(a)(col(widthCol).cast("int"), col(heightCol).cast("int"),
         col(rgbCol)))
-    val batch1 = Dedup.deterministicOnePerKey(
-        withFp.filter(col(idCol).isNotNull), idCol)
-      .unionByName(withFp.filter(col(idCol).isNull))
-    admitOnePerId(spark, path, batch1, idCol, fpColOut, maxHamming)
+    admitOnePerId(spark, path, Dedup.onePerKeyNullsKept(withFp, idCol),
+      idCol, fpColOut, maxHamming)
   }
 }

@@ -330,73 +330,72 @@ object SemanticIndex {
     * stance). NULL-id rows pass through (no identity to pair under);
     * NULL-vec rows pass through (retractions in flight must reach the
     * follow-up [[upsert]]). The batch reduces to one row per id up
-    * front ([[Dedup.deterministicOnePerKey]] — same-id rows can never
-    * pair under strict inequality, so both would survive).
+    * front ([[Dedup.onePerKeyNullsKept]] — same-id rows can never
+    * pair under strict inequality, so both would survive) and is READ
+    * ONCE: the reduced batch is localCheckpoint'd on entry and every
+    * scan (assignment, batch ids, the survivor anti-join) reads that.
     * EAGER: survivors materialize before internal checkpoints free.
     * The typical ingest step is `admit` → [[upsert]] survivors. */
   def admit(
       spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, vecCol: String, tau: Double,
-      maxClusterPostings: Option[Int] = None): DataFrame = {
-    val batch1 = Dedup.deterministicOnePerKey(
-        batch.filter(col(idCol).isNotNull), idCol)
-      .unionByName(batch.filter(col(idCol).isNull))
-      .localCheckpoint(true)
-    try admitOnePerId(spark, path, batch1, idCol, vecCol, tau,
-      maxClusterPostings)
-    finally Dedup.freeCheckpoint(batch1)
-  }
+      maxClusterPostings: Option[Int] = None): DataFrame =
+    admitOnePerId(spark, path, Dedup.onePerKeyNullsKept(batch, idCol),
+      idCol, vecCol, tau, maxClusterPostings)
 
   /** [[admit]] minus the up-front one-per-id reduction, for callers
     * that have ALREADY reduced the batch (the streaming path resolves
     * winners version-aware before gating — [[DedupIndex
     * .admitOnePerId]]'s rationale verbatim). Caller's guarantee: at
-    * most one row per non-null id. */
+    * most one row per non-null id. The batch is materialized once on
+    * entry, as in [[admit]]. */
   private[graft] def admitOnePerId(
-      spark: SparkSession, path: String, batch1: DataFrame,
+      spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, vecCol: String, tau: Double,
       maxClusterPostings: Option[Int]): DataFrame = {
     requireProbeArgs(tau, maxClusterPostings)
-    // ONE pin and ONE assignment pass for the probe AND the ranks
-    val p0 = pin(spark, path)
-    val assignedB = assignedFrame(
-        batch1, idCol, vecCol, centroidsAt(spark, path, p0))
-      .localCheckpoint(true)
-    try {
-      val pairs = probePinned(spark, path, p0, batch1, idCol, assignedB,
-        tau, includeBatchPairs = true, idPushLimit = 1000,
-        maxClusterPostings = maxClusterPostings)
+    graft.util.Checkpoints.withMaterialized(batch) { batch1 =>
+      // ONE pin and ONE assignment pass for the probe AND the ranks
+      val p0 = pin(spark, path)
+      val assignedB = assignedFrame(
+          batch1, idCol, vecCol, centroidsAt(spark, path, p0))
+        .localCheckpoint(true)
       try {
-        val ranked = assignedB.select(col("id"), col("centroid_sim"))
-        val batchIds = batch1.select(col(idCol).as("id"))
-          .filter(col("id").isNotNull).distinct()
-        // orient each pair: sides in the batch carry their rank; a
-        // corpus side outranks everything (csim null-safe: a corpus
-        // incumbent kills regardless of rank)
-        val rA = ranked.select(col("id").as("id_a"), col("centroid_sim").as("csim_a"))
-        val rB = ranked.select(col("id").as("id_b"), col("centroid_sim").as("csim_b"))
-        val inA = batchIds.select(col("id").as("id_a")).withColumn("in_a", lit(true))
-        val inB = batchIds.select(col("id").as("id_b")).withColumn("in_b", lit(true))
-        val oriented = pairs
-          .join(rA, Seq("id_a"), "left").join(rB, Seq("id_b"), "left")
-          .join(inA, Seq("id_a"), "left").join(inB, Seq("id_b"), "left")
-          .withColumn("in_a", coalesce(col("in_a"), lit(false)))
-          .withColumn("in_b", coalesce(col("in_b"), lit(false)))
-        // dead batch side per pair:
-        //  corpus-vs-batch: the batch side dies;
-        //  batch-vs-batch: the HIGHER (csim, id) side dies (null csim
-        //  never pairs — cosine was null — so no null rank arrives)
-        val dead = oriented.select(
-          when(!col("in_a"), col("id_b"))                   // corpus a kills b
-            .when(!col("in_b"), col("id_a"))                // corpus b kills a
-            .when(col("csim_a") > col("csim_b"), col("id_a"))
-            .when(col("csim_a") < col("csim_b"), col("id_b"))
-            .otherwise(col("id_b"))                         // csim tie: higher id dies
-            .as("__dead")).distinct()
-        batch1.join(dead, batch1(idCol) === dead("__dead"), "left_anti")
-          .localCheckpoint(true)
-      } finally Dedup.freeCheckpoint(pairs)
-    } finally Dedup.freeCheckpoint(assignedB)
+        val pairs = probePinned(spark, path, p0, batch1, idCol, assignedB,
+          tau, includeBatchPairs = true, idPushLimit = 1000,
+          maxClusterPostings = maxClusterPostings)
+        try {
+          val ranked = assignedB.select(col("id"), col("centroid_sim"))
+          val batchIds = batch1.select(col(idCol).as("id"))
+            .filter(col("id").isNotNull).distinct()
+          // orient each pair: sides in the batch carry their rank; a
+          // corpus side outranks everything (csim null-safe: a corpus
+          // incumbent kills regardless of rank)
+          val rA = ranked.select(col("id").as("id_a"), col("centroid_sim").as("csim_a"))
+          val rB = ranked.select(col("id").as("id_b"), col("centroid_sim").as("csim_b"))
+          val inA = batchIds.select(col("id").as("id_a")).withColumn("in_a", lit(true))
+          val inB = batchIds.select(col("id").as("id_b")).withColumn("in_b", lit(true))
+          val oriented = pairs
+            .join(rA, Seq("id_a"), "left").join(rB, Seq("id_b"), "left")
+            .join(inA, Seq("id_a"), "left").join(inB, Seq("id_b"), "left")
+            .withColumn("in_a", coalesce(col("in_a"), lit(false)))
+            .withColumn("in_b", coalesce(col("in_b"), lit(false)))
+          // dead batch side per pair:
+          //  corpus-vs-batch: the batch side dies;
+          //  batch-vs-batch: the HIGHER (csim, id) side dies (null csim
+          //  never pairs — cosine was null — so no null rank arrives)
+          val dead = oriented.select(
+            when(!col("in_a"), col("id_b"))                   // corpus a kills b
+              .when(!col("in_b"), col("id_a"))                // corpus b kills a
+              .when(col("csim_a") > col("csim_b"), col("id_a"))
+              .when(col("csim_a") < col("csim_b"), col("id_b"))
+              .otherwise(col("id_b"))                         // csim tie: higher id dies
+              .as("__dead")).distinct()
+          batch1.join(dead, batch1(idCol) === dead("__dead"), "left_anti")
+            .localCheckpoint(true)
+        } finally Dedup.freeCheckpoint(pairs)
+      } finally Dedup.freeCheckpoint(assignedB)
+    }
   }
 
   private def centroidsAt(

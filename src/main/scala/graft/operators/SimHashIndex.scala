@@ -144,10 +144,7 @@ object SimHashIndex {
       s"batch already carries a '$fpColOut' column — pass fpColOut")
     val a = textAlgo(spark, path)
     val withFp = batch.withColumn(fpColOut, fpOf(a)(col(textCol)))
-    val batch1 = Dedup.deterministicOnePerKey(
-        withFp.filter(col(idCol).isNotNull), idCol)
-      .unionByName(withFp.filter(col(idCol).isNull))
-    ImageDedupIndex.admitOnePerId(spark, path, batch1, idCol, fpColOut,
-      maxHamming)
+    ImageDedupIndex.admitOnePerId(spark, path,
+      Dedup.onePerKeyNullsKept(withFp, idCol), idCol, fpColOut, maxHamming)
   }
 }

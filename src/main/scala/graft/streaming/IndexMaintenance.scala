@@ -703,7 +703,8 @@ object IndexMaintenance {
     val one = one0.filter(col(contentCol).isNotNull)
     // admission gate BEFORE any index sees the batch: near-dups of
     // the admitted corpus (or of a smaller-id batchmate) never
-    // ingest. admit() returns a materialized frame; on replay the
+    // ingest. The gate reads `one` once (it checkpoints its batch on
+    // entry) and returns a materialized frame; on replay the
     // batch's ids are self-excluded from the corpus probe, so the
     // same survivors come back and every keyed upsert converges.
     // admitOnePerId, not admit: `one` is already reduced (and with
@@ -734,20 +735,15 @@ object IndexMaintenance {
     // gate: batch ids self-exclude from the corpus probe.
     val admittedSem = (semanticPath, semanticTau) match {
       case (Some(sp), Some(tau)) if liveResolved && !admitted.isEmpty =>
-        val needEmbed = !admitted.columns.contains(vecCol)
-        // checkpoint the embedded frame: admitOnePerId scans its
-        // batch several times (assignment, batch ids, the survivor
-        // anti-join), and each un-persisted scan would re-run the
-        // embedder kernel — the same must-not-re-embed rationale as
-        // withVec below
+        // admitOnePerId materializes `embedded` once on entry, so the
+        // embedder kernel runs once however often the gate scans the
+        // batch (the must-not-re-embed rationale of withVec below)
         val embedded =
-          if (!needEmbed) admitted
+          if (admitted.columns.contains(vecCol)) admitted
           else session.embedder.embedColumn(admitted, contentCol, vecCol)
-            .localCheckpoint(true)
-        try graft.operators.SemanticIndex.admitOnePerId(
+        graft.operators.SemanticIndex.admitOnePerId(
           session.spark, sp, embedded, idCol, vecCol, tau,
           maxClusterPostings = admitMaxClusterPostings)
-        finally if (needEmbed) graft.util.Checkpoints.free(embedded)
       case _ => admitted
     }
     val gatedSem = admittedSem ne admitted

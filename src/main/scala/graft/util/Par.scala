@@ -2,6 +2,7 @@ package graft.util
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.{Failure, Try}
 
 /** Run INDEPENDENT Spark actions from driver threads so the scheduler
   * overlaps their jobs (optimization guide §2.6): actions are only
@@ -53,21 +54,32 @@ object Par {
   private implicit val ec: ExecutionContext =
     ExecutionContext.fromExecutorService(pool)
 
-  private def joinAll[T](fs: Seq[Future[Any]]): Seq[Any] = {
-    // await every branch (never throws here) ...
-    val results = fs.map(f => Await.ready(f, Duration.Inf).value.get)
+  // A call made FROM a pool thread (a branch that itself calls both/
+  // three) runs its branches inline, in argument order: submitting
+  // them would queue behind the very threads that park awaiting them,
+  // and a `three` whose branches each nest a `both` parks all three
+  // threads forever. Inline keeps the join-all-then-fail contract.
+  private def onPool: Boolean =
+    Thread.currentThread.getName.startsWith("graft-par-")
+
+  private def joinAll(branches: Seq[() => Any]): Seq[Any] = {
+    // run or await every branch (never throws here) ...
+    val results =
+      if (onPool) branches.map(b => Try(b()))
+      else branches.map(b => Future(b()))
+        .map(f => Await.ready(f, Duration.Inf).value.get)
     // ... THEN surface the first failure, after all siblings settled
-    results.collectFirst { case scala.util.Failure(e) => throw e }
+    results.collectFirst { case Failure(e) => throw e }
     results.map(_.get)
   }
 
   def both[A, B](a: => A, b: => B): (A, B) = {
-    val r = joinAll(Seq(Future(a), Future(b)))
+    val r = joinAll(Seq(() => a, () => b))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
 
   def three[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val r = joinAll(Seq(Future(a), Future(b), Future(c)))
+    val r = joinAll(Seq(() => a, () => b, () => c))
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
   }
 }
